@@ -2,7 +2,7 @@
 
 Usage, from the root of a checkout:
 
-    python3 perfbench/run.py --workload iterative_build --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload iterative_build --seed 1 --seconds 18 --trace 0
 
 A workload is a fixed list of registered queries over the sf0.1 tables
 committed under ``perfbench/data/sf0.1``. One process on
@@ -232,7 +232,7 @@ def percentile_block(values: list[float]) -> dict:
 
 
 class Runner:
-    def __init__(self, spark, registry: dict, cpus: int):
+    def __init__(self, spark, registry: dict, cpus: int, probe_cpu: bool = True):
         import bench
         from reddit_big_data_spark.plans import cache as plan_cache
 
@@ -242,6 +242,10 @@ class Runner:
         self.plan_cache = plan_cache
         self.full = {n.split("_", 1)[0]: q for n, q in registry.items()}
         self.cpus = cpus
+        # Each CPU probe walks /proc for a few milliseconds between
+        # queries. Only the end-to-end metrics use it, so traced runs,
+        # whose spans must cover their passes, go without.
+        self.probe_cpu = probe_cpu
         # DAGScheduler.nextJobId (private[scheduler] in Scala, public on the
         # JVM) is the id of the next job: two reads bound the jobs any
         # thread submitted in between.
@@ -262,14 +266,16 @@ class Runner:
         self.attempted += 1
         if tracer is not None:
             tracer.query = q.name
-        cpu0 = tree_cpu_seconds()
+        cpu0 = tree_cpu_seconds() if self.probe_cpu else None
         t0, w0, j0 = time.perf_counter(), time.time(), self.dag.nextJobId()
         try:
             df = q.fn(self.spark, DATA)
             t1, j1 = time.perf_counter(), self.dag.nextJobId()
             out = df.toPandas() if collect else self.force(df)
             t2, w2, j2 = time.perf_counter(), time.time(), self.dag.nextJobId()
-            rec.update(ok=True, output=out, cpu_s=tree_cpu_seconds() - cpu0)
+            rec.update(ok=True, output=out)
+            if self.probe_cpu:
+                rec["cpu_s"] = tree_cpu_seconds() - cpu0
             if tracer is not None:
                 rec["leaked_blocks"] = self.sc._jsc.getPersistentRDDs().size()
                 rec["cached_bytes"] = sum(
@@ -292,11 +298,12 @@ class Runner:
         return rec
 
     def run_pass(self, order: list[str], collect: bool = False, tracer=None) -> dict:
-        start, cpu = time.perf_counter(), tree_cpu_seconds()
+        cpu = tree_cpu_seconds() if self.probe_cpu else None
+        start = time.perf_counter()
         recs = [self.run_query(s, collect=collect, tracer=tracer) for s in order]
         return {
             "seconds": time.perf_counter() - start,
-            "cpu_seconds": tree_cpu_seconds() - cpu,
+            "cpu_seconds": tree_cpu_seconds() - cpu if self.probe_cpu else None,
             "queries": recs,
         }
 
@@ -441,7 +448,7 @@ def main(argv: list[str]) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     gateway_proc = spark.sparkContext._gateway.proc
     try:
-        runner = Runner(spark, registry, cpus)
+        runner = Runner(spark, registry, cpus, probe_cpu=not args.trace)
         tracer = None
         if args.trace:
             import spans

@@ -58,8 +58,13 @@ WORKLOADS = {
         ),
         Workload(
             name="streaming_state",
-            queries=["q131"],
-            nominal_pass_s=2.0,
+            # Three queries, not q131 alone: a query's CPU time varies
+            # from process to process by about a fifth, largely
+            # independently of the others, so a pass over three spreads
+            # less across runs. q132 (streaming dedup) is left out: its
+            # CPU time spread the most across processes.
+            queries=["q131", "q133", "q153"],
+            nominal_pass_s=5.0,
             expect_zero=("operators.simjoin.", "ml."),
         ),
     ]
