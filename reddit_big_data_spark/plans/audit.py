@@ -1,138 +1,103 @@
-"""Multi-consumer recompute audit: count LIVE parquet scans per table in
-a DataFrame's physical plan — scans that will actually re-read (and
-re-derive everything above) at execution time, excluding subtrees served
-by a cached InMemoryRelation.
+"""One walker over a DataFrame's physical plan, and the multi-consumer
+recompute audit built on it.
 
-Why this exists: Spark re-executes a shared subtree once PER CONSUMER
-unless it is persisted/checkpointed — the single most common silent perf
-bug in this package's history (round 6 fixed q70/q96/q101/q115/q116;
-round 9's sweep caught q111's double trigram explosion, q38/q49's triple
-regex-normalize, and q66's double winnowing pass). The lint-style sweep
-in tests/test_scan_audit.py pins every registered query's live-scan
-counts so a new consumer of an unpersisted expensive subtree fails CI
-instead of shipping a 2x query.
+``plan_nodes(df)`` yields every node of the plan that will run, read
+from the JVM ``SparkPlan`` tree rather than from its ``toString()``
+rendering. The rendering is a display format, not a data structure:
+branch heads print without a depth marker, AQE appends an
+'== Initial Plan ==' copy of each adaptive subtree, and an
+InMemoryRelation prints its cached build plan with an indentation
+context of its own, so any depth-based parse of it misplaces nodes. The
+tree has none of these problems: an adaptive plan's current physical
+plan, a query stage's plan and an InMemoryTableScanExec's cached build
+plan are all fields, and subquery plans hang off expressions, so the
+walker reaches each one explicitly and knows which of them it is in.
+The plan lint (plans/lint.py) checks node classes and fields on the same
+walk.
 
-HISTORY — why this walks the JVM TREE and not the plan STRING: the first
-two versions parsed ``executedPlan().toString()`` by tree-art depth,
-climbing each FileScan line's ancestor chain to decide cached vs live.
-That text is not reliably parseable: (a) ``:-`` branch-head nodes carried
-no ``+-`` marker and were invisible (ADVICE r9); (b) the first-marker
-truncation of AQE's '== Initial Plan ==' section discarded final-plan
-text in subquery-bearing plans (ADVICE r9); and — found while fixing both
-— (c) InMemoryRelation re-renders its cached build plan with an
-INDEPENDENT indentation context, so nested cached AQE sections print at
-depths SHALLOWER than their owning node and the ancestor climb
-misclassifies cached scans as live (three false positives in the r10
-sweep). The JVM physical-plan tree has none of these problems:
-InMemoryTableScanExec holds its cached plan in a field, NOT as a child,
-so walking ``children()`` yields exactly the nodes that will run.
+``live_file_scans`` counts the parquet scans that will actually re-read
+(and re-derive everything above) at execution time. Spark re-executes a
+shared subtree once per consumer unless it is persisted or checkpointed,
+the most common silent performance bug in this package, so the sweep in
+tests/test_plan_lint.py pins every registered query's live-scan counts
+(allowances in tests/test_scan_audit.py) and a new consumer of an
+unpersisted expensive subtree fails CI instead of shipping a 2x query.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame
 
 _TABLE_RE = re.compile(r"/(\w+)\.parquet")
 
-# Nodes whose children are not live work of THIS plan: a ReusedExchange /
-# ReusedSubquery re-serves another already-counted stage's output, and an
-# AdaptiveSparkPlan's `children()` view is superseded by its current
-# physical plan (walked explicitly below).
-_NO_RECURSE = ("ReusedExchangeExec", "ReusedSubqueryExec", "AdaptiveSparkPlanExec")
+# A ReusedExchange / ReusedSubquery re-serves the output of a stage the
+# walk reaches elsewhere; its child is that stage again, not new work.
+_REUSED = ("ReusedExchangeExec", "ReusedSubqueryExec")
 
 
-def _walk(node, counts: dict[str, int], seen_subqueries: set[str]) -> None:
-    cname = node.getClass().getSimpleName()
-    if cname == "FileSourceScanExec":
-        paths = node.relation().location().rootPaths()
-        p = paths.apply(0).toString() if paths.size() else ""
-        m = _TABLE_RE.search(p)
-        t = m.group(1) if m else "other"
-        counts[t] = counts.get(t, 0) + 1
-    elif cname == "AdaptiveSparkPlanExec":
-        # The plan that will actually run (current physical plan before
-        # execution, final plan after).
-        _walk(node.executedPlan(), counts, seen_subqueries)
-    elif cname.endswith("QueryStageExec"):
-        _walk(node.plan(), counts, seen_subqueries)
-    if cname not in _NO_RECURSE:
-        children = node.children()
-        for i in range(children.size()):
-            _walk(children.apply(i), counts, seen_subqueries)
-    # Subquery plans hang off EXPRESSIONS, not children. The same logical
-    # subquery (one execution, by ReuseSubquery) is referenced from every
-    # node its predicate was pushed into — e.g. both the Filter and the
-    # FileScan's data-filter list — as DISTINCT SubqueryExec instances
-    # sharing one name ("subquery#N"). Dedup by name so one execution
-    # counts once; genuinely different subqueries get different exprIds.
-    subqueries = node.subqueries()
-    for i in range(subqueries.size()):
-        s = subqueries.apply(i)
-        try:
-            key = s.name()
-        except Exception:  # pragma: no cover - non-named subquery plan
-            key = s.toString().splitlines()[0]
-        if key not in seen_subqueries:
-            seen_subqueries.add(key)
-            _walk(s, counts, seen_subqueries)
+class PlanNode(NamedTuple):
+    name: str  # the JVM class's simple name, e.g. "SortExec"
+    node: Any  # the py4j handle of the SparkPlan node
+    in_subquery: bool  # reached through an expression's subquery plan
+    cached: bool  # inside an InMemoryRelation's cached build plan
+
+
+def plan_nodes(df: DataFrame) -> Iterator[PlanNode]:
+    """Every node of the DataFrame's executed physical plan, parents
+    before their children. A subquery executes once however many
+    expressions reference it (one name, several SubqueryExec instances),
+    so each named subquery is walked once per cached/live context. A
+    cached build plan fills once however many scans read it, and nested
+    persisted frames re-reference each other's caches, so each build plan
+    is walked once per subquery context too (by JVM identity)."""
+    identity = df.sparkSession.sparkContext._jvm.System.identityHashCode
+    seen_subqueries: set[tuple[str, bool]] = set()
+    seen_cached: set[tuple[int, bool]] = set()
+    stack = [(df._jdf.queryExecution().executedPlan(), False, False)]
+    while stack:
+        node, in_subquery, cached = stack.pop()
+        name = node.getClass().getSimpleName()
+        yield PlanNode(name, node, in_subquery, cached)
+        subqueries = node.subqueries()
+        for i in range(subqueries.size()):
+            s = subqueries.apply(i)
+            try:
+                key = (s.name(), cached)
+            except Exception:  # pragma: no cover - non-named subquery plan
+                key = (s.toString().splitlines()[0], cached)
+            if key not in seen_subqueries:
+                seen_subqueries.add(key)
+                stack.append((s, True, cached))
+        if name == "AdaptiveSparkPlanExec":
+            # current physical plan before execution, final plan after
+            stack.append((node.executedPlan(), in_subquery, cached))
+        elif name.endswith("QueryStageExec"):
+            stack.append((node.plan(), in_subquery, cached))
+        elif name == "InMemoryTableScanExec":
+            plan = node.relation().cachedPlan()
+            key = (identity(plan), in_subquery)
+            if key not in seen_cached:
+                seen_cached.add(key)
+                stack.append((plan, in_subquery, True))
+        elif name not in _REUSED:
+            children = node.children()
+            for i in reversed(range(children.size())):
+                stack.append((children.apply(i), in_subquery, cached))
 
 
 def live_file_scans(df: DataFrame) -> dict[str, int]:
-    """table name -> number of LIVE FileScans in the physical plan
-    (scans inside a cached InMemoryRelation's build plan excluded —
-    they are not children of InMemoryTableScanExec in the JVM tree;
-    subquery plans included, deduplicated per logical subquery)."""
+    """table name -> number of LIVE FileScans in the physical plan:
+    scans inside a cached InMemoryRelation's build plan are excluded,
+    subquery plans included (once per logical subquery)."""
     counts: dict[str, int] = {}
-    _walk(df._jdf.queryExecution().executedPlan(), counts, set())
+    for n in plan_nodes(df):
+        if n.name == "FileSourceScanExec" and not n.cached:
+            paths = n.node.relation().location().rootPaths()
+            m = _TABLE_RE.search(paths.apply(0).toString() if paths.size() else "")
+            t = m.group(1) if m else "other"
+            counts[t] = counts.get(t, 0) + 1
     return counts
-
-
-# ---------------------------------------------------------------------------
-# Text-plan helpers still used by the plan lint (plans/lint.py), which
-# checks string-level patterns rather than scan liveness.
-
-_NODE_RE = re.compile(r"^([ :|]*)(?:\+-|:-)\s")
-
-
-def _depth_or_none(line: str) -> int | None:
-    """Tree depth of a plan line's NODE marker ('+-' last child, ':-'
-    first child of a binary node), or None for non-node lines (pure art
-    columns, wrapped node text)."""
-    m = _NODE_RE.match(line)
-    if m:
-        return len(m.group(1))
-    s = line.strip()
-    if not s or set(s) <= set(":| "):
-        return None  # pure tree art
-    if line.startswith((" ", ":")):
-        return None  # continuation of a wrapped node's text
-    return 0  # an unindented root-level node
-
-
-def drop_initial_plan_sections(lines: list[str]) -> list[str]:
-    """Remove AQE '== Initial Plan ==' sections from a plan string's
-    lines — one per AdaptiveSparkPlan, so subquery-bearing plans carry
-    several (ADVICE r9: a first-marker truncation discards final-plan
-    text printed after the first one). A section spans from its header
-    line to the next node line at depth <= the header's own depth.
-
-    CAVEAT (why the scan audit above does NOT build on this): nested
-    cached plans re-render with an independent indentation context, so
-    depth-based skipping is only reliable for the top-level section.
-    The lint's string-pattern checks tolerate that; scan-liveness
-    decisions do not."""
-    kept: list[str] = []
-    skip_depth: int | None = None
-    for ln in lines:
-        d = _depth_or_none(ln)
-        if skip_depth is not None:
-            if d is None or d > skip_depth:
-                continue  # inside the skipped section
-            skip_depth = None  # this line closes the section; process it
-        if "== Initial Plan ==" in ln and d is not None:
-            skip_depth = d
-            continue
-        kept.append(ln)
-    return kept

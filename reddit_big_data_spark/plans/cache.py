@@ -1,4 +1,5 @@
-"""Explicit release path for localCheckpoint blocks (VERDICT r6 #5).
+"""Release paths for what a query acquires on the driver:
+localCheckpoint blocks and overlap threads.
 
 The session cache contract (tests/test_cache_ledger.py) is that
 ``spark.catalog.clearCache()`` between queries reclaims every
@@ -18,9 +19,21 @@ query boundary — after every consumer of the current query's frames has
 run its action — because a released checkpoint cannot be recomputed
 (localCheckpoint truncates lineage by design). bench.py and the test
 suite's between-query mop-up both call it right after clearCache.
+
+``overlap(background, foreground)`` is the one way a query runs two
+independent pieces of driver work at once: DataFrame construction is
+often a chain of driver barriers (collects, counts, checkpoints) with
+idle executors between them, and an independent job forced on a second
+driver thread fills that idle time. Its thread is joined on every path,
+so a caller that cleans up after a failed ``foreground`` never races a
+job that is still filling the frame it is about to release.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.util import inheritable_thread_target
 
 
 def release_local_checkpoints(spark, blocking: bool = False) -> list[int]:
@@ -47,3 +60,17 @@ def release_local_checkpoints(spark, blocking: bool = False) -> list[int]:
             jrdd.unpersist(blocking)
             released.append(int(rid))
     return released
+
+
+def overlap(background, foreground):
+    """Run ``background()`` on a driver thread while ``foreground()`` runs
+    on this one; return ``(background(), foreground())``.
+
+    The thread inherits this thread's job properties (job group, tags,
+    scheduler pool). If ``foreground`` raises, its error propagates only
+    after ``background`` has finished and the thread has exited;
+    ``background``'s own error, if any, is then dropped."""
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(inheritable_thread_target(background))
+        fg = foreground()
+        return fut.result(), fg

@@ -4,19 +4,21 @@ native expressions suffice (reference code/eda/project_eda.py:331-333),
 zip-joins, cartesian products — plus the ones 100 TB adds: global
 single-partition windows and global sorts that aren't top-k.
 
-Pure Python over the executed-plan string: no Catalyst extension needed,
-usable in CI (tests/test_plan_lint.py sweeps every registered query) and
-interactively (`lint_plan(df)`).
+Pure Python over the physical-plan tree that plans/audit.py walks: each
+check reads a node's class and fields (a Window's partitionSpec, a
+Sort's global flag), never the plan's text rendering, so a hazard inside
+a cached build plan or a subquery is seen wherever it prints. No
+Catalyst extension needed; usable in CI (tests/test_plan_lint.py sweeps
+every registered query) and interactively (`lint_plan(df)`).
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from reddit_big_data_spark.plans.audit import drop_initial_plan_sections
+from reddit_big_data_spark.plans.audit import plan_nodes
 
 
 @dataclass(frozen=True)
@@ -28,17 +30,16 @@ class Finding:
         return f"[{self.code}] {self.detail}"
 
 
-# Wrapper nodes that sit above the logical root of the user's plan.
-_ROOT_WRAPPERS = ("AdaptiveSparkPlan", "ResultQueryStage", "==")
-# A physical Sort node with global=true ("Sort [keys], true, offset").
-_GLOBAL_SORT_NODE = re.compile(r"^Sort \[.*\], true, ")
+# Nodes that only wrap the user's plan; the root is the first node below
+# them (query stages are matched by their "QueryStageExec" suffix).
+_WRAPPERS = ("AdaptiveSparkPlanExec", "WholeStageCodegenExec", "InputAdapter")
 # Nodes that bound a root sort's input: aggregates collapse the corpus to
 # its group count, limits/top-k to a constant. A root sort with one of
 # these anywhere beneath it is the trailing oracle-stability orderBy on
 # an already-reduced result set (the accepted registry pattern); a root
 # sort with NONE of them is a corpus-sized range shuffle and gets its own
-# informational code (ADVICE r9: the r9 structural exemption waived ANY
-# root sort, silently passing an interactive full-corpus orderBy).
+# informational code (an exemption for ANY root sort would silently pass
+# an interactive full-corpus orderBy).
 _BOUNDING_NODES = (
     "HashAggregate",
     "SortAggregate",
@@ -49,27 +50,6 @@ _BOUNDING_NODES = (
 )
 
 
-def _node_text(line: str) -> str:
-    """Strip tree art (+- : |), indentation, and the codegen ``*(n)``
-    stage marker from a physical-plan line, leaving the node text."""
-    s = re.sub(r"^[+\-:|\s]+", "", line)
-    return re.sub(r"^\*\(\d+\) ", "", s)
-
-
-def _top_level_groups(s: str) -> int:
-    """Count top-level [...] groups in a plan-node argument list."""
-    depth = 0
-    groups = 0
-    for ch in s:
-        if ch == "[":
-            if depth == 0:
-                groups += 1
-            depth += 1
-        elif ch == "]":
-            depth = max(0, depth - 1)
-    return groups
-
-
 def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
     """Return scale-hazard findings for the DataFrame's executed plan.
 
@@ -77,116 +57,66 @@ def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
     oracle query whose final orderBy exists only for comparison, or
     GLOBAL_WINDOW when the window input is a pre-aggregated tiny table).
     """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # After a DataFrame has EXECUTED, AQE's toString appends an
-    # "== Initial Plan ==" section repeating the pre-adaptive tree; drop
-    # every such section — one per AdaptiveSparkPlan, so subquery-bearing
-    # plans carry several at arbitrary nesting depths (ADVICE r9) — so
-    # (a) the root-sort exemption below doesn't false-positive on the
-    # Initial-Plan copy of the root Sort sitting at a non-root line
-    # (review r9, empirically confirmed), and (b) every other check scans
-    # the plan that actually ran, once.
-    plan = "\n".join(drop_initial_plan_sections(plan.splitlines()))
+    nodes = list(plan_nodes(df))
+    names = [n.name for n in nodes]
     findings: list[Finding] = []
 
     def add(code: str, detail: str) -> None:
         if code not in allow:
             findings.append(Finding(code, detail))
 
-    if "CartesianProduct" in plan:
+    if "CartesianProductExec" in names:
         add("CARTESIAN", "CartesianProduct join — O(n*m) pair explosion")
-    if "BroadcastNestedLoopJoin" in plan:
+    if "BroadcastNestedLoopJoinExec" in names:
         add("NESTED_LOOP", "BroadcastNestedLoopJoin — non-equi join fallback")
-    if "BatchEvalPython" in plan:
+    if any(n.startswith("BatchEvalPython") for n in names):
         add("PY_UDF", "row-at-a-time Python UDF — blocks codegen, forks workers")
     # Arrow-batched Python is the sanctioned escape hatch but still worth
-    # surfacing: it should be deliberate, not accidental.
-    if "ArrowEvalPython" in plan or "MapInPandas" in plan:
+    # surfacing: it should be deliberate, not accidental. The prefix also
+    # matches the Arrow-optimized UDTF node (ArrowEvalPythonUDTFExec).
+    if any(n.startswith("ArrowEvalPython") or "MapInPandas" in n for n in names):
         add("PY_ARROW", "Arrow-batched Python stage (deliberate use only)")
     # A Window whose spec has no partitioning funnels ALL rows into one
-    # task. Plan text: partitioned+ordered = "Window [funcs], [partKeys],
-    # [order]" (3 groups); unpartitioned = "Window [funcs], [order]";
-    # partition-only (no orderBy) = "Window [funcs], [partKeys]". The
-    # 2-group case is global ONLY if the second group is an ordering
-    # (contains ASC/DESC direction markers).
-    for line in plan.splitlines():
-        s = line.strip().lstrip("+-: ").strip()
-        if s.startswith("Window "):
-            body = s.split(" ", 1)[1]
-            if _top_level_groups(body) < 3:
-                last = body.rsplit(", [", 1)[-1]
-                if " ASC" in last or " DESC" in last:
-                    add(
-                        "GLOBAL_WINDOW",
-                        "window with empty partitionBy — single-task sort",
-                    )
-                    break
+    # task; without an ordering it is a whole-frame aggregate, not a
+    # single-task sort.
+    if any(
+        n.name == "WindowExec"
+        and n.node.partitionSpec().isEmpty()
+        and not n.node.orderSpec().isEmpty()
+        for n in nodes
+    ):
+        add("GLOBAL_WINDOW", "window with empty partitionBy — single-task sort")
     # Global Sort (range-shuffle total order). A global sort at the plan
     # ROOT with an aggregate/limit beneath it is the trailing
-    # oracle-stability orderBy every registry query ends with (VERDICT r1
-    # accepted the pattern; r9 made this structural so new queries can't
-    # forget a hand-list entry): it sorts exactly the already-reduced
-    # result set the caller is about to collect, so its cost is bounded
-    # by the result size, not the corpus. A BARE root sort — nothing
-    # beneath it that reduces cardinality — is a corpus-sized range
-    # shuffle; it gets the informational ROOT_SORT code (ADVICE r9
-    # tightening: the r9 exemption waived ANY root sort), distinct from
-    # GLOBAL_SORT so the registry sweep can enforce the hazard class
-    # strictly while interactive lint users still see the warning. An
-    # INTERIOR global sort — feeding further computation — is a genuine
-    # full-shuffle hazard and is flagged as before.
-    # (indent, node) pairs: indent is the column where the node text
-    # starts, which in Spark's tree art IS the tree depth — used below to
-    # skip inline subquery subtrees when deciding root-sort boundedness.
-    entries = []
-    for ln in plan.splitlines():
-        n = _node_text(ln)
-        if n:
-            # indent = where the tree art ends (BEFORE the codegen
-            # "*(n) " marker, whose width would skew sibling depths)
-            entries.append((len(re.match(r"^[+\-:|\s]*", ln).group(0)), n))
-    nodes = [n for _, n in entries]
-    root_i = next(
-        (i for i, n in enumerate(nodes) if not n.startswith(_ROOT_WRAPPERS)), None
+    # oracle-stability orderBy every registry query ends with: it sorts
+    # exactly the already-reduced result set the caller is about to
+    # collect, so its cost is bounded by the result size, not the
+    # corpus. A BARE root sort — nothing beneath it that reduces
+    # cardinality — is a corpus-sized range shuffle; it gets the
+    # informational ROOT_SORT code, distinct from GLOBAL_SORT so the
+    # registry sweep can enforce the hazard class strictly while
+    # interactive lint users still see the warning. An INTERIOR global
+    # sort — feeding further computation — is a genuine full-shuffle
+    # hazard. Subquery plans are not the root sort's data input, so an
+    # aggregate inside one does not bound it.
+    root = next(
+        n for n in nodes
+        if n.name not in _WRAPPERS and not n.name.endswith("QueryStageExec")
     )
-    for i, n in enumerate(nodes):
-        if not _GLOBAL_SORT_NODE.match(n):
-            continue
-        if i != root_i:
-            add(
-                "GLOBAL_SORT",
-                "interior global sort without limit — full-shuffle total order",
-            )
-            break
-        # Root sort: everything after it in the preorder walk is its
-        # subtree (it is the root), so one scan decides boundedness —
-        # EXCEPT subquery plans, which also print there and are NOT the
-        # sort's data input. ADVICE r10: an aggregate inside a scalar
-        # subquery used to suppress ROOT_SORT for a genuinely unbounded
-        # corpus-wide root sort. Subqueries print two ways: INLINE
-        # ("Subquery subquery#N" under the hosting node, its subtree at
-        # deeper indent — skipped by indent), or as a TRAILING section
-        # ("===== Subqueries ====="/"Subquery:N Hosting operator" at
-        # root indent — a hard stop).
-        bounded = False
-        skip_deeper_than = None
-        for ind, m in entries[i + 1 :]:
-            if skip_deeper_than is not None:
-                if ind > skip_deeper_than:
-                    continue
-                skip_deeper_than = None
-            if m.startswith(("===== Subqueries", "Subquery:")):
-                break
-            if m.startswith("Subquery"):
-                skip_deeper_than = ind
-                continue
-            if m.startswith(_BOUNDING_NODES):
-                bounded = True
-                break
-        if not bounded:
-            add(
-                "ROOT_SORT",
-                "bare global sort at plan root over an unaggregated, "
-                "unlimited input — corpus-sized range shuffle",
-            )
+    global_sorts = [
+        n for n in nodes if n.name == "SortExec" and getattr(n.node, "global")()
+    ]
+    if any(n is root for n in global_sorts) and not any(
+        n.name.startswith(_BOUNDING_NODES) for n in nodes if not n.in_subquery
+    ):
+        add(
+            "ROOT_SORT",
+            "bare global sort at plan root over an unaggregated, "
+            "unlimited input — corpus-sized range shuffle",
+        )
+    if any(n is not root for n in global_sorts):
+        add(
+            "GLOBAL_SORT",
+            "interior global sort without limit — full-shuffle total order",
+        )
     return findings

@@ -20,6 +20,7 @@ from reddit_big_data_spark.operators.similarity import (
     dot,
     lsh_topk,
 )
+from reddit_big_data_spark.plans.cache import overlap
 from reddit_big_data_spark.registry import register
 from reddit_big_data_spark.sources.io import read_table, spread
 
@@ -120,16 +121,7 @@ def _ann_recall_frame(ann, exact: DataFrame, floor: int) -> DataFrame:
     # the hit semi-join and the top-1 projection, and each would
     # otherwise re-run the corpus-scan scoring pass.
     if callable(ann):
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                inheritable_thread_target(exact.localCheckpoint)
-            )
-            ann = ann()
-            exact = fut.result()
+        exact, ann = overlap(exact.localCheckpoint, ann)
     else:
         exact = exact.localCheckpoint()
     hits = (

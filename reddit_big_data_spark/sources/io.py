@@ -49,17 +49,6 @@ TESTDATA_TABLES = (
 _SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
-def clear_schema_cache() -> None:
-    """Drop every cached footer schema (ADVICE r16). For the two
-    unsupported-by-default scenarios: a test that regenerates a corpus in
-    place, or a later session in the same process whose parquet-reader
-    confs (e.g. spark.sql.legacy.parquet.nanosAsLong) differ from the
-    session that populated the cache — the cache is keyed only by
-    (sf_dir, table) and would otherwise replay a schema inferred under
-    the old conf."""
-    _SCHEMA_CACHE.clear()
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1/S2: parquet scan. Schema comes from the footer ONCE per
     (sf_dir, table) per process (see _SCHEMA_CACHE); filters and column

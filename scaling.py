@@ -817,109 +817,6 @@ def run(spark, sf_dirs: list[str], with_shuffle: bool = True) -> dict:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Measurement fixture cache (round 16, VERDICT r15 #5): the CI scaling
-# pins (tests/test_scaling.py) re-derived every candidate count live on
-# every suite run — ~2 min of the 15-minute budget spent re-measuring
-# numbers that are DETERMINISTIC functions of (package code, corpus,
-# partition conf, Spark build). This cache stores each measure's record
-# under exactly that key, same discipline as the oracle truth fixtures
-# (oracle_sweep.py): a conservative lineage digest decides validity —
-# ANY package/harness source edit, corpus regeneration, partition-conf
-# change, or Spark upgrade misses the key and forces a live re-measure
-# (the refreshed cache is committed at HEAD, so a reviewer's run at the
-# same tree hits it). A rotating live audit
-# (tests/test_scaling.py::test_scaling_cache_rotating_audit) re-derives
-# one cached entry per suite run and fails on divergence, bounding how
-# long a nondeterministic measure could hide behind its cached value.
-# ---------------------------------------------------------------------------
-
-SCALING_CACHE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    "tests", "fixtures", "scaling_counts.json",
-)
-
-_CODE_DIGEST: str | None = None
-
-
-def scaling_code_digest() -> str:
-    """md5 over this harness + every package source + the Spark build:
-    conservative on purpose (any package edit invalidates every cached
-    measurement rather than tracking per-measure lineage)."""
-    global _CODE_DIGEST
-    if _CODE_DIGEST is not None:
-        return _CODE_DIGEST
-    import glob as _glob
-    import hashlib as _hashlib
-
-    import pyspark as _pyspark
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    files = [os.path.abspath(__file__)] + sorted(
-        _glob.glob(
-            os.path.join(root, "reddit_big_data_spark", "**", "*.py"),
-            recursive=True,
-        )
-    )
-    h = _hashlib.md5()
-    for p in files:
-        h.update(os.path.relpath(p, root).encode())
-        with open(p, "rb") as f:
-            h.update(f.read())
-    h.update(_pyspark.__version__.encode())
-    _CODE_DIGEST = h.hexdigest()[:16]
-    return _CODE_DIGEST
-
-
-def _measure_arg_key(arg) -> str:
-    """Corpus measures key on the full-corpus content digest (regenerated
-    testdata misses); synthetic measures key on the planted size."""
-    if isinstance(arg, str):
-        from oracle_sweep import corpus_digest
-
-        return f"c{corpus_digest(arg)}"
-    return f"n{int(arg)}"
-
-
-def load_measure_cache() -> dict:
-    """The committed cache iff its lineage digest matches the current
-    tree; a stale or unreadable cache reads as empty (=> live measure)."""
-    try:
-        with open(SCALING_CACHE_PATH) as f:
-            d = json.load(f)
-    except (FileNotFoundError, ValueError):
-        return {}
-    if d.get("code") != scaling_code_digest():
-        return {}
-    return d
-
-
-def cached_measure(spark, measure_fn, arg) -> dict:
-    """measure_fn(spark, arg) through the fixture cache: a hit returns
-    the committed record without touching Spark; a miss measures live
-    and writes through (atomic replace). The entry records the measure
-    name and arg so the rotating audit can re-derive it blind."""
-    part = spark.conf.get("spark.sql.shuffle.partitions")
-    key = f"{measure_fn.__name__}|{_measure_arg_key(arg)}|p{part}"
-    cache = load_measure_cache()
-    hit = cache.get("entries", {}).get(key)
-    if hit is not None:
-        return dict(hit["rec"])
-    rec = measure_fn(spark, arg)
-    full = cache or {"code": scaling_code_digest(), "entries": {}}
-    full["entries"][key] = {
-        "measure": measure_fn.__name__,
-        "arg": arg,
-        "rec": rec,
-    }
-    os.makedirs(os.path.dirname(SCALING_CACHE_PATH), exist_ok=True)
-    tmp = SCALING_CACHE_PATH + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    os.replace(tmp, SCALING_CACHE_PATH)
-    return dict(rec)
-
-
 def main() -> int:
     from reddit_big_data_spark.session import get_spark
 

@@ -130,17 +130,55 @@ def test_unknown_near_dup_mode_rejected(spark):
 def test_banded_mode_plan_is_scale_clean(spark):
     """The banded composition is not a registered query, so the lint
     sweep in test_plan_lint.py never sees it — lint it here with q161's
-    own (empty) allowance: the deployment mode must clear the same
-    hazard bar as the oracle mode (no cartesian, no row-at-a-time UDF,
-    no global window, no interior global sort)."""
+    own allowance: the deployment mode must clear the same hazard bar as
+    the oracle mode (no cartesian, no row-at-a-time UDF, no global
+    window, no interior global sort). Its one allowed code, PY_ARROW, is
+    the BPE stage's dictionary-trick pandas UDF, which runs on the
+    distinct vocabulary only."""
     from reddit_big_data_spark.plans.audit import live_file_scans
     from reddit_big_data_spark.plans.lint import lint_plan
     from reddit_big_data_spark.queries.pipeline import corpus_pipeline
+    from tests.test_plan_lint import _ALLOW
 
     df = corpus_pipeline(spark, SF_SMOKE, near_dup_mode="banded")
-    findings = [f for f in lint_plan(df) if f.code != "ROOT_SORT"]
+    allow = set(_ALLOW["q161_corpus_pipeline"])
+    findings = [f for f in lint_plan(df, allow=allow) if f.code != "ROOT_SORT"]
     assert not findings, "; ".join(map(str, findings))
     # materialize-once holds in deployment mode too: the report plan
     # reads only the persisted stage caches, zero live corpus scans
     # (same shape the registered exact mode shows in test_scan_audit)
     assert live_file_scans(df) == {}
+
+
+def test_failed_construction_releases_overlap_thread_and_fps(spark, monkeypatch):
+    """The winnowing pass runs on a driver thread while the near-dup
+    construction runs on this one. If construction raises, q161 must
+    join that thread and unpersist the winnowing frame before the error
+    reaches the caller, so neither outlives the failure."""
+    import threading
+
+    from reddit_big_data_spark.queries import pipeline
+
+    made = []
+    real_fingerprints = pipeline.winnowing_fingerprints
+
+    def recording_fingerprints(*args, **kwargs):
+        df = real_fingerprints(*args, **kwargs)
+        made.append(df)
+        return df
+
+    def failing_join(*args, **kwargs):
+        raise RuntimeError("near-dup construction failed")
+
+    monkeypatch.setattr(pipeline, "winnowing_fingerprints", recording_fingerprints)
+    monkeypatch.setattr(pipeline, "similarity_join", failing_join)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="construction failed") as raised:
+        pipeline.q161_corpus_pipeline(spark, SF_SMOKE)
+    # `raised` keeps the failed call's frames alive, so a thread owned by
+    # an unjoined pool would still be running here.
+    new_threads = [t for t in threading.enumerate() if t not in before]
+    assert not new_threads, (new_threads, raised.value)
+    (fps,) = made
+    level = fps.storageLevel
+    assert not (level.useMemory or level.useDisk), level

@@ -2,17 +2,7 @@
 stages must grow sub-quadratically across real scale factors, measured
 on the production code paths via scaling.py — the same functions that
 write SCALING.json. Distinct input sizes in the driver testdata:
-documents 500 (sf0.001) -> 5000 (sf0.1), embeddings 500 -> 2000.
-
-Round 16 (VERDICT r15 #5): every measurement routes through
-scaling.cached_measure — a committed fixture cache keyed by (package
-code digest, corpus digest / planted size, partition conf, Spark
-build), so an unchanged tree re-asserts the pins against the stored
-counts in milliseconds instead of re-deriving ~2 min of candidate
-counts per suite run. ANY source edit invalidates the whole cache
-(conservative lineage, same discipline as the oracle truth fixtures),
-and test_scaling_cache_rotating_audit re-derives one cached entry live
-per run so a nondeterministic measure can't hide behind its cache."""
+documents 500 (sf0.001) -> 5000 (sf0.1), embeddings 500 -> 2000."""
 
 from __future__ import annotations
 
@@ -25,7 +15,7 @@ SF_BIG = "/root/testdata/sf0.1"
 def _exponent(spark, measure):
     pts = []
     for sf_dir in (SF_SMOKE, SF_BIG):
-        rec = scaling.cached_measure(spark, measure, sf_dir)
+        rec = measure(spark, sf_dir)
         pts.append((rec["n_input"], rec["candidates"]))
         spark.catalog.clearCache()
     exp = scaling.fit_exponent(pts)
@@ -82,7 +72,7 @@ def test_triangle_wedge_fanout_within_orientation_bound(spark):
     graph gets sparser as the corpus grows), so the pin is the
     per-scale bound — the claim the orientation actually makes."""
     for sf_dir in (SF_SMOKE, SF_BIG):
-        rec = scaling.cached_measure(spark, scaling.measure_q142, sf_dir)
+        rec = scaling.measure_q142(spark, sf_dir)
         m, wedges = rec["n_input"], rec["candidates"]
         bound = (2**0.5) * m**1.5
         assert wedges <= bound, (
@@ -100,7 +90,7 @@ def test_bfs_frontier_fanout_linear_in_edges(spark):
     from reddit_big_data_spark.plans.cache import release_local_checkpoints
 
     for sf_dir in (SF_SMOKE, SF_BIG):
-        rec = scaling.cached_measure(spark, scaling.measure_q152, sf_dir)
+        rec = scaling.measure_q152(spark, sf_dir)
         m2, fanout = rec["n_input"], rec["candidates"]
         assert fanout <= 3 * m2, (
             f"{sf_dir}: frontier fan-out {fanout} > 3 * {m2}"
@@ -118,14 +108,10 @@ def test_global_rank_partitions_stay_balanced(spark):
     orderBy window. Pin: the largest partition holds < 2x the ideal
     share on q160's production input at both SFs (a single-partition
     collapse would read ~P = parallelism times the ideal)."""
-    # Measured LIVE, never cached (r16): Spark's RangePartitioner samples
-    # with a seed derived from the RDD id, so the max-partition size is a
-    # function of SESSION HISTORY, not of (code, corpus, conf) — the
-    # cache's determinism claim does not hold for this measure (observed
-    # 505 vs 508 across sessions), and a cached entry would eventually
-    # flake the byte-exact rotating audit. The assertions here are
-    # tolerance-based, which is the sound contract for a sampled
-    # partitioner.
+    # Spark's RangePartitioner samples with a seed derived from the RDD
+    # id, so the max-partition size depends on session history (observed
+    # 505 vs 508 across sessions); the assertions are tolerance-based,
+    # which is the sound contract for a sampled partitioner.
     for sf_dir in (SF_SMOKE, SF_BIG):
         rec = scaling.measure_q160(spark, sf_dir)
         assert rec["candidates"] < rec["n_input"], rec
@@ -140,7 +126,7 @@ def test_exact_simjoin_prunes_allpairs(spark):
     prefix/positional/length filters keep candidates a small fraction
     of the all-pairs join at every measured scale."""
     for sf_dir, cap in ((SF_SMOKE, 0.01), (SF_BIG, 0.01)):
-        rec = scaling.cached_measure(spark, scaling.measure_q36, sf_dir)
+        rec = scaling.measure_q36(spark, sf_dir)
         n = rec["n_input"]
         frac = rec["candidates"] / (n * (n - 1) / 2)
         assert frac < cap, f"{sf_dir}: candidates are {frac:.2%} of all-pairs"
@@ -167,7 +153,7 @@ def test_simhash_adaptive_width_subquadratic(spark):
     constant-factor claim per scale."""
     pts = []
     for sf_dir, cap in ((SF_SMOKE, 0.03), (SF_BIG, 0.01)):
-        rec = scaling.cached_measure(spark, scaling.measure_q98, sf_dir)
+        rec = scaling.measure_q98(spark, sf_dir)
         n = rec["n_input"]
         frac = rec["candidates"] / (n * (n - 1) / 2)
         assert frac < cap, f"{sf_dir}: candidates are {frac:.2%} of all-pairs"
@@ -288,7 +274,7 @@ def _synthetic_exponent(spark, measure, sizes=(1000, 8000)):
     pts = []
     recs = []
     for n in sizes:
-        rec = scaling.cached_measure(spark, measure, n)
+        rec = measure(spark, n)
         recs.append(rec)
         pts.append((rec["n_input"], rec["candidates"]))
         spark.catalog.clearCache()
@@ -336,73 +322,3 @@ def test_synthetic_kcore_work_linear_at_fixed_density(spark):
         # ADVICE r11: a row produced by the 64-round cap instead of the
         # degree fixpoint must self-identify — and never happen here
         assert rec["converged"] is True, rec
-
-
-def test_scaling_cache_has_no_unauditable_conf_entries():
-    """ADVICE r16: the rotating audit only exercises entries recorded
-    under the running session's spark.sql.shuffle.partitions, so a cache
-    entry keyed under a conf NO standing context runs with would be
-    permanently unaudited dead weight. The two standing contexts are the
-    test suite (conftest: SPARK_GRAFT_CPUS default 8 -> p8, or the box's
-    core count when overridden) and the scaling harness (session default
-    parallelism). Anything else — say a p4 entry from a one-off manual
-    run — is flagged here so it gets pruned instead of rotting."""
-    import os
-
-    cache = scaling.load_measure_cache()
-    suffixes = {k.rsplit("|", 1)[1] for k in cache.get("entries", {})}
-    exercised = {
-        "p8",  # suite default (conftest SPARK_GRAFT_CPUS=8)
-        f"p{max(int(os.environ.get('SPARK_GRAFT_CPUS', 8)), 8)}",
-        f"p{max(os.cpu_count() or 8, 8)}",  # harness default parallelism
-    }
-    dead = suffixes - exercised
-    assert not dead, (
-        f"scaling cache holds entries under partition conf(s) {sorted(dead)} "
-        f"that neither the suite nor the harness runs with — prune them "
-        f"from {scaling.SCALING_CACHE_PATH} (they would never be audited)"
-    )
-
-
-def test_scaling_cache_rotating_audit(spark):
-    """One cached measurement per suite run is re-derived LIVE and must
-    equal its committed record byte-for-byte — the same rotating-audit
-    discipline the oracle truth fixtures carry (oracle_harness.py). The
-    code digest already forces a full re-measure on any source edit;
-    what this bounds is the remaining hazard class, a measure that is
-    NOT the deterministic function of (code, corpus, conf) the cache
-    assumes — such a measure diverges here within one rotation cycle.
-    On a cold cache (first run after an edit) every entry was just
-    measured live, so the audit is vacuously satisfied."""
-    import glob
-    import os
-
-    from reddit_big_data_spark.plans.cache import release_local_checkpoints
-
-    cache = scaling.load_measure_cache()
-    # Audit only entries recorded under THIS session's partition conf
-    # (r16): the live re-derivation below runs in the suite's session,
-    # and an entry measured under a different spark.sql.shuffle.partitions
-    # is a different cache key on purpose — comparing across confs would
-    # be auditing the conf, not the measure's determinism.
-    part = spark.conf.get("spark.sql.shuffle.partitions")
-    entries = sorted(
-        k for k in cache.get("entries", {}) if k.endswith(f"|p{part}")
-    )
-    if not entries:
-        return  # cold cache: this run measured everything live already
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = len(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    key = entries[rounds % len(entries)]
-    entry = cache["entries"][key]
-    measure = getattr(scaling, entry["measure"])
-    live = measure(spark, entry["arg"])
-    spark.catalog.clearCache()
-    release_local_checkpoints(spark)
-    assert live == entry["rec"], (
-        f"cached scaling measurement diverged from a live re-derivation "
-        f"({key}): cached={entry['rec']} live={live} — either the "
-        f"measure is nondeterministic (a bug in its claim) or the cache "
-        f"is stale in a way the lineage digest missed; delete "
-        f"{scaling.SCALING_CACHE_PATH} and re-run"
-    )
